@@ -359,16 +359,16 @@ def brute_force_topk(
     Deterministic ranking: cosine DESC, then corpus id ASC as the
     tiebreaker. Self-matches (same id) are excluded.
 
-    r13: a cap-bounded probe set rides the in-task panel scorer
-    (`_brute_panel_topk`) — one corpus pass, no probe×corpus pair
-    fan-out through the broadcast join + per-pair pandas UDF; larger
-    probe sets keep the join form."""
+    A probe set of at most ``_PANEL_CAP`` rows is held in-task and
+    scored against every row by the shared IVF kernel
+    (:func:`_panel_pairs` without centroids) — one corpus pass, no
+    probe×corpus pair fan-out.  A larger probe set has no cells to co-group on, so it
+    runs the public :func:`cosine_pairs` broadcast nested loop."""
     probes_n = _normed(probes, id_col, vec_col)
     panel = probes_n.take(_PANEL_CAP + 1)
-    if 0 < len(panel) <= _PANEL_CAP:
-        return _brute_panel_topk(
-            _normed(vectors, id_col, vec_col), panel, k
-        )
+    if len(panel) <= _PANEL_CAP:
+        pairs = _panel_pairs(_normed(vectors, id_col, vec_col), panel, k)
+        return _pairs_topk_window(pairs, k)
     pairs = cosine_pairs(probes, vectors, id_col, vec_col).filter(
         F.col("qid") != F.col("cid")
     )
@@ -848,7 +848,7 @@ def ivf_pq_topk(
     assignment, nprobe nearest cells per probe); scoring is exactly
     :func:`pq_topk`'s ADC (snapped squared-L2 over stride codebooks)
     restricted to the candidates — both halves reuse the factored
-    machinery (`_nearest_centroids`, `_pq_codes`), so the composition
+    machinery (`_ivf_candidates`, `_pq_codes`), so the composition
     cannot drift from its parts. The metric mix (cosine cells, L2
     scoring) is an approximation on unnormalized vectors — rerank the
     top-k' with :func:`cosine_for_pairs` when exact cosine order
@@ -857,10 +857,9 @@ def ivf_pq_topk(
     Output contract matches :func:`pq_topk`; a probe returns at most
     min(k, candidates-in-its-cells) rows.
     """
-    cand, _ = _ivf_candidates(
+    cand = _ivf_candidates(
         vectors, probes, centroid_stride, nprobe, id_col, vec_col
-    )
-    cand = cand.select("qid", F.col("cid").alias("vid"))
+    ).select("qid", F.col("cid").alias("vid"))
     # cells and codebook are DIFFERENT knobs: centroid_stride shapes
     # the coarse cells; codebook_size (when given) pins a bounded
     # ~256-entry codebook per subspace so the encode pass stays linear
@@ -917,62 +916,6 @@ def _as_prefix(normed: DataFrame, prefix: str) -> DataFrame:
     )
 
 
-def _nearest_centroids(
-    vectors_n: DataFrame, centroids_n: DataFrame, n: int
-) -> DataFrame:
-    """(vid, cvid) of each vector's n nearest centroids by cosine.
-
-    Both inputs are pre-normed (vid, vec, norm) tables — the caller
-    persists the corpus-side one so this assign pass and the later
-    verify pass share a single norm computation.  The centroid table
-    is tiny (cells << corpus) and broadcast, so the assignment is
-    map-side: each corpus row scores all centroids with array-native
-    dots and keeps its top n via a per-vid window — the same plan
-    shape IVF coarse quantization has on a 1000-executor cluster.
-    Ties break on centroid id for cross-engine determinism.
-    """
-    c = _as_prefix(vectors_n, "c")
-    p = _as_prefix(centroids_n, "q")
-    scored = c.join(F.broadcast(p)).select(
-        F.col("cid").alias("vid"),
-        F.col("qid").alias("cvid"),
-        _cosine(
-            dot_dec_batch(F.col("qvec"), F.col("cvec")),
-            F.col("qnorm"),
-            F.col("cnorm"),
-        ).alias("cosine"),
-    )
-    if n == 1:
-        # the corpus-sized case (training assign, index build, append):
-        # a partial-aggregated argmax shuffles ONE row per (mapper,
-        # vid) instead of sorting the full N·cells scored table in a
-        # window (guide §2.3 — aggregate before the shuffle).  Ordering
-        # is the window's exactly: max(struct(cosine, -cvid)) picks
-        # highest cosine, tie -> smaller cvid (bigger negation); a
-        # NULL cosine field sorts below every non-null struct, the
-        # DESC-NULLS-LAST the window form had.  -0.0 cannot occur (a
-        # zero snapped dot divides to +0.0), so the double ordering is
-        # unambiguous.
-        return (
-            scored.groupBy("vid")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("cosine").alias("cos"),
-                        (-F.col("cvid")).alias("neg"),
-                    )
-                ).alias("best")
-            )
-            .select("vid", (-F.col("best.neg")).alias("cvid"))
-        )
-    w = W.partitionBy("vid").orderBy(F.desc("cosine"), F.col("cvid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n)
-        .select("vid", "cvid")
-    )
-
-
 def _cosine_for_pairs_normed(pairs: DataFrame, normed: DataFrame) -> DataFrame:
     """:func:`cosine_for_pairs` over a pre-normed (and typically
     persisted) vector table — both join sides are renames of the same
@@ -995,21 +938,29 @@ def _cosine_for_pairs_normed(pairs: DataFrame, normed: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Collected-panel Arrow scorers (r13).  A SERVING probe batch is a small
-# panel by design (the declared serving/append/ingest queries probe a
-# FIXED 50-id panel at every scale), and a trained quantizer's centroid
-# set is √N-bounded — so both fit on the driver and inside every task.
-# Holding them in-task turns the IVF verify from a join pipeline
-# (candidates ⋈ probes ⋈ corpus → per-pair pandas UDF, which ships BOTH
-# vectors across the Python boundary per candidate pair — guide §4.2's
-# N·m·K lesson) into ONE corpus-side pass: each scanned row crosses the
-# Arrow boundary once, is scored against the in-task panel with the
-# identical snapped-numpy arithmetic `dot_dec_batch` uses, and only
-# per-batch top-k survivors flow into the final exact rank.  Over-cap
-# panels/centroid sets keep the join/window form (the fallbacks below)
-# — the caps are driver/task memory bounds, not correctness bounds.
+# In-task IVF scoring.  Every IVF verb collects its centroid set once and
+# holds it inside every task (a trained quantizer has ≈√N cells, and
+# PySpark broadcasts a large pickled closure by itself), so assigning a
+# vector to its cell is a numpy pass over an Arrow batch.  Probes reach
+# the one scoring kernel, `_score_cells`, through one of two feeders,
+# chosen in `_ivf_pairs` by probe count:
+#   * a PANEL of at most _PANEL_CAP probes is held in-task too, and one
+#     mapInArrow pass over the corpus scores each row against the probes
+#     of its cell — no exchange before the final rank;
+#   * a larger probe set is assigned to its nprobe cells in-task and
+#     co-grouped with the cell-assigned corpus by cell id — one exchange
+#     per side and no driver collect of probes.
+# Either way the kernel uses the snapped arithmetic of `dot_dec_batch`
+# and emits only per-probe top-k survivors; the final window re-ranks.
 _PANEL_CAP = 1024
-_SCORER_CENTROID_CAP = 4096
+_PAIRS_SCHEMA = "qid long, cid long, cosine double"
+
+
+def _centroid_rows(cents_n: DataFrame) -> list:
+    """A normed (vid, vec, norm) centroid set collected for in-task use:
+    ≈√N rows for a trained quantizer, corpus/stride rows for the
+    stride one."""
+    return cents_n.collect()
 
 
 def _rows_matrix(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -1021,6 +972,26 @@ def _rows_matrix(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     vecs = np.array([list(r["vec"]) for r in rows], dtype=np.float64)
     norms = np.array([float(r["norm"]) for r in rows], dtype=np.float64)
     return ids, vecs, norms
+
+
+def _batch_block(batch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(ids, vec matrix float64, norms) of an Arrow record batch with
+    (vid, vec, norm) columns.  ``flatten()`` honors list offsets
+    (embedding cells are non-null fixed-dim by contract), so the
+    reshape is safe; the widen is exact."""
+    n_rows = batch.num_rows
+    mat = (
+        batch.column("vec")
+        .flatten()
+        .to_numpy(zero_copy_only=False)
+        .reshape(n_rows, -1)
+        .astype(np.float64)
+    )
+    return (
+        batch.column("vid").to_numpy(zero_copy_only=False),
+        mat,
+        batch.column("norm").to_numpy(zero_copy_only=False),
+    )
 
 
 def _snapped_cos_block(
@@ -1042,45 +1013,47 @@ def _snapped_cos_block(
 
 
 def _numpy_probe_cells(
-    qids: np.ndarray,
     qmat: np.ndarray,
     qnorms: np.ndarray,
     cvids: np.ndarray,
     cmat: np.ndarray,
     cnorms: np.ndarray,
     nprobe: int,
-) -> dict[int, list[int]]:
-    """{probe id -> its nprobe nearest cell ids} — the numpy replica of
-    ``_nearest_centroids(probes_n, cents_n, nprobe)``: snapped cosine,
-    rank by (cosine DESC NULLS LAST, cvid ASC), first nprobe rows.
-    ``cvids`` must be ascending (``_rows_matrix`` guarantees it), so a
-    stable sort on descending filled cosine IS the window's order.
-    Parity is pinned by tests/test_selection.py."""
-    out: dict[int, list[int]] = {}
-    for i in range(len(qids)):
+) -> np.ndarray:
+    """(probes, min(nprobe, cells)) matrix of each probe's nearest cell
+    ids: snapped cosine ranked by (cosine DESC NULLS LAST, cvid ASC).
+    ``cvids`` must be ascending (``_rows_matrix`` sorts), so a stable
+    sort on the descending NULL-filled cosine IS that order.  Parity
+    with the JVM reference is pinned in tests/test_pipeline.py."""
+    m = min(nprobe, len(cvids))
+    out = np.empty((len(qnorms), m), dtype=np.int64)
+    if m == 0:
+        return out
+    for i in range(len(qnorms)):
         cos, isnull = _snapped_cos_block(qmat[i], qnorms[i], cmat, cnorms)
         filled = np.where(isnull, -np.inf, cos)
-        order = np.argsort(-filled, kind="stable")
-        out[int(qids[i])] = [int(c) for c in cvids[order[:nprobe]]]
+        out[i] = cvids[np.argsort(-filled, kind="stable")[:m]]
     return out
 
 
-def _emit_pairs_topk(qids, cids, cos, isnull, k: int):
+def _emit_pairs_topk(qids, cids, cos, isnull, k: int | None):
     """One Arrow record batch of the per-qid top-k of the given pair
     arrays under the exact final order (cosine DESC NULLS LAST, cid
-    ASC).  Emitting only per-batch survivors is lossless: the global
-    top-k of a union is the top-k of per-chunk top-k's under a total
-    order, and the final window re-ranks exactly."""
+    ASC); ``k=None`` keeps every pair.  Emitting only per-chunk
+    survivors is lossless: the global top-k of a union is the top-k of
+    per-chunk top-k's under a total order, and the final window
+    re-ranks exactly."""
     import pyarrow as _pa
 
     filled = np.where(isnull, -np.inf, cos)
-    order = np.lexsort((cids, -filled, qids))
-    qs = qids[order]
-    pos = np.arange(len(order))
-    starts = np.maximum.accumulate(
-        np.where(np.r_[True, qs[1:] != qs[:-1]], pos, 0)
-    )
-    keep = order[pos - starts < k]
+    keep = np.lexsort((cids, -filled, qids))
+    if k is not None:
+        qs = qids[keep]
+        pos = np.arange(len(keep))
+        starts = np.maximum.accumulate(
+            np.where(np.r_[True, qs[1:] != qs[:-1]], pos, 0)
+        )
+        keep = keep[pos - starts < k]
     return _pa.record_batch(
         {
             "qid": _pa.array(qids[keep], type=_pa.int64()),
@@ -1094,6 +1067,33 @@ def _emit_pairs_topk(qids, cids, cos, isnull, k: int):
     )
 
 
+def _score_cells(groups, qids, qmat, qnorms, k: int | None):
+    """THE IVF scoring kernel.  ``groups`` yields (probe indices into
+    qids/qmat/qnorms, corpus ids, corpus matrix, corpus norms): each
+    listed probe is scored against its group's rows with
+    `_snapped_cos_block`, self-matches (same id) are dropped, and the
+    per-probe top-k survivors come back as one record batch (every
+    pair when ``k`` is None) — or None when no pair survives."""
+    oq, oc, ocos, onull = [], [], [], []
+    for pidx, cid, cm, cn in groups:
+        for i in pidx:
+            cos, isnull = _snapped_cos_block(qmat[i], qnorms[i], cm, cn)
+            m = cid != qids[i]
+            oq.append(np.full(int(m.sum()), qids[i], dtype=np.int64))
+            oc.append(cid[m])
+            ocos.append(cos[m])
+            onull.append(isnull[m])
+    if not sum(len(a) for a in oq):
+        return None
+    return _emit_pairs_topk(
+        np.concatenate(oq),
+        np.concatenate(oc),
+        np.concatenate(ocos),
+        np.concatenate(onull),
+        k,
+    )
+
+
 def _assign_block(
     cm: np.ndarray,
     cn: np.ndarray,
@@ -1101,13 +1101,12 @@ def _assign_block(
     cmat: np.ndarray,
     cnorms: np.ndarray,
 ) -> np.ndarray:
-    """Nearest-centroid id per row of a corpus block — the numpy
-    replica of ``_nearest_centroids(..., 1)``: iterate centroids in
-    ASCENDING cvid with a strict > update, so ties keep the earlier
+    """Nearest-centroid id per row of a corpus block: iterate centroids
+    in ASCENDING cvid with a strict > update, so ties keep the earlier
     (smaller) cvid; NULL cosines (norm product 0) fill -inf so an
-    all-NULL row keeps the initial smallest cvid — exactly the
-    ``max(struct(cosine, -cvid))`` ordering of the JVM assign.  Parity
-    is pinned end-to-end in tests/test_pipeline.py."""
+    all-NULL row keeps the initial smallest cvid — the
+    ``max(struct(cosine, -cvid))`` order of the JVM reference in
+    tests/test_pipeline.py, and of every IVF oracle."""
     best = np.full(len(cm), -np.inf)
     bestc = np.full(len(cm), cvids[0], dtype=np.int64)
     for j in range(len(cvids)):
@@ -1119,128 +1118,184 @@ def _assign_block(
     return bestc
 
 
-def _assign_cells_arrow(corpus_n: DataFrame, cent_rows) -> DataFrame:
-    """(vid, vec, norm, cvid) — the corpus with its nearest-centroid
-    assignment attached IN-TASK (one MapInArrow pass, no broadcast
-    join, no assignment groupBy, no corpus re-join): the row batch
-    passes through untouched with one appended int64 column."""
+def _with_cvid(vectors_n: DataFrame, cent_rows, fn) -> DataFrame:
+    """(vid, vec, norm, cvid) — one mapInArrow pass applying
+    ``fn(batch, cvids, cmat, cnorms) -> (rows, cvid)`` to every batch
+    of ``vectors_n`` (vid, vec, norm) against the in-task centroids:
+    the batch rows ``rows`` (indices) pass through with the int64
+    ``cvid`` column appended.  Without centroids there is no cell, so
+    no row comes out."""
     cvids, cmat, cnorms = _rows_matrix(cent_rows)
-
-    def assign(batches):
-        import pyarrow as _pa
-
-        for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
-                continue
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            bestc = _assign_block(cm, cn, cvids, cmat, cnorms)
-            yield batch.append_column(
-                "cvid", _pa.array(bestc, type=_pa.int64())
-            )
-
-    src = corpus_n.select("vid", "vec", "norm")
-    out_type = dict(src.dtypes)["vec"]
-    return src.mapInArrow(
-        assign, f"vid long, vec {out_type}, norm double, cvid long"
-    )
-
-
-def _panel_candidates_arrow(
-    corpus_n: DataFrame,
-    cent_rows,
-    panel_rows,
-    nprobe: int,
-) -> DataFrame:
-    """(qid, cid) IVF candidate pairs in ONE corpus pass: in-task
-    assignment + the in-task probe→cell map.  Replaces the assignment
-    groupBy, the probe-cell window, and the candidates join+distinct
-    (one cell per vid makes the pairs structurally unique; the
-    disjointness contract is pinned in tests/test_pipeline.py)."""
-    qids, qmat, qnorms = _rows_matrix(panel_rows)
-    cvids, cmat, cnorms = _rows_matrix(cent_rows)
-    probe_cells = _numpy_probe_cells(
-        qids, qmat, qnorms, cvids, cmat, cnorms, nprobe
-    )
-    cell_qids: dict[int, np.ndarray] = {}
-    for qid, cells in probe_cells.items():
-        for cv in cells:
-            cell_qids.setdefault(cv, []).append(qid)
-    cell_qids = {c: np.array(q, dtype=np.int64) for c, q in cell_qids.items()}
 
     def gen(batches):
         import pyarrow as _pa
 
         for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
+            if batch.num_rows == 0 or not len(cvids):
                 continue
-            cid = batch.column("vid").to_numpy(zero_copy_only=False)
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            bestc = _assign_block(cm, cn, cvids, cmat, cnorms)
-            oq, oc = [], []
-            for cell in np.unique(bestc):
-                qs = cell_qids.get(int(cell))
-                if qs is None:
-                    continue
-                rows = cid[bestc == cell]
-                pairs_q = np.repeat(qs, len(rows))
-                pairs_c = np.tile(rows, len(qs))
-                m = pairs_q != pairs_c
-                oq.append(pairs_q[m])
-                oc.append(pairs_c[m])
-            if oq and sum(len(a) for a in oq):
-                yield _pa.record_batch(
-                    {
-                        "qid": _pa.array(np.concatenate(oq)),
-                        "cid": _pa.array(np.concatenate(oc)),
-                    }
-                )
+            rows, cvid = fn(batch, cvids, cmat, cnorms)
+            yield batch.take(_pa.array(rows)).append_column(
+                "cvid", _pa.array(cvid, type=_pa.int64())
+            )
 
-    return corpus_n.select("vid", "vec", "norm").mapInArrow(
-        gen, "qid long, cid long"
+    src = vectors_n.select("vid", "vec", "norm")
+    vec_type = dict(src.dtypes)["vec"]
+    return src.mapInArrow(
+        gen, f"vid long, vec {vec_type}, norm double, cvid long"
     )
 
 
-def _brute_panel_topk(corpus_n: DataFrame, panel_rows, k: int) -> DataFrame:
-    """Exact panel top-k in ONE corpus pass: every scanned row scores
-    ALL in-task panel probes (self-matches excluded), per-batch top-k
-    survivors flow to the final exact rank — the `brute_force_topk`
-    semantics without the probe×corpus pair fan-out through the
-    broadcast join + per-pair pandas UDF."""
+def _assign_cells_arrow(corpus_n: DataFrame, cent_rows) -> DataFrame:
+    """(vid, vec, norm, cvid) — the corpus with its nearest-centroid
+    assignment attached in-task (no broadcast join, no assignment
+    groupBy, no corpus re-join)."""
+
+    def nearest(batch, cvids, cmat, cnorms):
+        _, cm, cn = _batch_block(batch)
+        return (
+            np.arange(batch.num_rows),
+            _assign_block(cm, cn, cvids, cmat, cnorms),
+        )
+
+    return _with_cvid(corpus_n, cent_rows, nearest)
+
+
+def _probe_cells_arrow(probes_n: DataFrame, cent_rows, nprobe: int) -> DataFrame:
+    """(vid, vec, norm, cvid) — each probe once per each of its nprobe
+    nearest cells, chosen in-task."""
+
+    def nearest(batch, cvids, cmat, cnorms):
+        _, qm, qn = _batch_block(batch)
+        cells = _numpy_probe_cells(qm, qn, cvids, cmat, cnorms, nprobe)
+        rows = np.repeat(np.arange(batch.num_rows), cells.shape[1])
+        return rows, cells.ravel()
+
+    return _with_cvid(probes_n, cent_rows, nearest)
+
+
+def _read_cells(spark, index_dir: str) -> DataFrame:
+    """The cell table of a :func:`build_ivf_index` index under its fixed
+    schema — an index built from an empty corpus holds no cell file to
+    infer a schema from."""
+    return spark.read.schema(
+        "vid long, vec array<float>, norm double, cvid long, src string"
+    ).parquet(index_dir.rstrip("/") + "/cells")
+
+
+def _panel_pairs(
+    scan: DataFrame, panel_rows, k: int | None, cent_rows=None, nprobe: int = 0
+) -> DataFrame:
+    """Panel feeder: (qid, cid, cosine) survivors of a collected probe
+    panel (≤ _PANEL_CAP rows, held in-task), scored by ONE mapInArrow
+    pass over ``scan`` (vid, vec, norm[, cvid]) — no exchange before
+    the final rank.
+
+    Without ``cent_rows`` every probe scores every row (exact search).
+    With them each probe searches its ``nprobe`` nearest cells, chosen
+    in driver numpy: a scan that carries ``cvid`` (a built index) is
+    statically pruned to the probed cells (PartitionFilters, no
+    subquery job), and any other scan has each row assigned to its
+    nearest centroid in-task."""
     qids, qmat, qnorms = _rows_matrix(panel_rows)
+    every = np.arange(len(qids))
+    cols = ["vid", "vec", "norm"]
+    cell_probes = None
+    cvids = cmat = cnorms = None
+    if cent_rows is not None:
+        cvids, cmat, cnorms = _rows_matrix(cent_rows)
+        cell_probes = {}
+        for i, cells in enumerate(
+            _numpy_probe_cells(qmat, qnorms, cvids, cmat, cnorms, nprobe)
+        ):
+            for cv in cells:
+                cell_probes.setdefault(int(cv), []).append(i)
+        if "cvid" in scan.columns:
+            scan = scan.filter(F.col("cvid").isin(sorted(cell_probes)))
+            cols.append("cvid")
+    stored = "cvid" in cols
 
     def score(batches):
         for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
+            if batch.num_rows == 0 or cell_probes == {}:
                 continue
-            cid = batch.column("vid").to_numpy(zero_copy_only=False)
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            oq, oc, ocos, onull = [], [], [], []
-            for i in range(len(qids)):
-                cos, isnull = _snapped_cos_block(qmat[i], qnorms[i], cm, cn)
-                m = cid != qids[i]
-                oq.append(np.full(int(m.sum()), qids[i], dtype=np.int64))
-                oc.append(cid[m])
-                ocos.append(cos[m])
-                onull.append(isnull[m])
-            if oq and sum(len(a) for a in oq):
-                yield _emit_pairs_topk(
-                    np.concatenate(oq),
-                    np.concatenate(oc),
-                    np.concatenate(ocos),
-                    np.concatenate(onull),
-                    k,
+            cid, cm, cn = _batch_block(batch)
+            if cell_probes is None:
+                groups = [(every, cid, cm, cn)]
+            else:
+                cv = (
+                    batch.column("cvid").to_numpy(zero_copy_only=False)
+                    if stored
+                    else _assign_block(cm, cn, cvids, cmat, cnorms)
                 )
+                groups = []
+                for cell in np.unique(cv):
+                    pidx = cell_probes.get(int(cell))
+                    if pidx:
+                        rows = np.nonzero(cv == cell)[0]
+                        groups.append((pidx, cid[rows], cm[rows], cn[rows]))
+            out = _score_cells(groups, qids, qmat, qnorms, k)
+            if out is not None:
+                yield out
 
-    pairs = corpus_n.select("vid", "vec", "norm").mapInArrow(
-        score, "qid long, cid long, cosine double"
+    return scan.select(*cols).mapInArrow(score, _PAIRS_SCHEMA)
+
+
+def _cogroup_pairs(
+    probes_n: DataFrame, scan: DataFrame, cent_rows, k: int | None, nprobe: int
+) -> DataFrame:
+    """Cogroup feeder: (qid, cid, cosine) survivors of a probe set of
+    any size.  Probes are assigned to their ``nprobe`` cells in-task,
+    the corpus to its one cell (or read with its stored ``cvid``), and
+    ``groupBy("cvid").cogroup(...)`` hands each cell's probes and rows
+    to the kernel.  A stored cell table is first left-semi joined to
+    the probed cells, so dynamic partition pruning limits its scan to
+    them."""
+    probe_cells = _probe_cells_arrow(probes_n, cent_rows, nprobe)
+    if "cvid" in scan.columns:
+        cells = scan.select("vid", "vec", "norm", "cvid").join(
+            probe_cells.select("cvid"), "cvid", "left_semi"
+        )
+    else:
+        cells = _assign_cells_arrow(scan, cent_rows)
+
+    def score(probes, corpus):
+        import pyarrow as _pa
+
+        if probes.num_rows and corpus.num_rows:
+            qids, qmat, qnorms = _batch_block(
+                probes.combine_chunks().to_batches()[0]
+            )
+            block = _batch_block(corpus.combine_chunks().to_batches()[0])
+            out = _score_cells(
+                [(range(len(qids)), *block)], qids, qmat, qnorms, k
+            )
+            if out is not None:
+                return _pa.Table.from_batches([out])
+        return _pa.table(
+            {
+                "qid": _pa.array([], _pa.int64()),
+                "cid": _pa.array([], _pa.int64()),
+                "cosine": _pa.array([], _pa.float64()),
+            }
+        )
+
+    return (
+        probe_cells.groupBy("cvid")
+        .cogroup(cells.groupBy("cvid"))
+        .applyInArrow(score, _PAIRS_SCHEMA)
     )
-    return _pairs_topk_window(pairs, k)
+
+
+def _ivf_pairs(
+    probes_n: DataFrame, scan: DataFrame, cent_rows, nprobe: int, k: int | None
+) -> DataFrame:
+    """(qid, cid, cosine) IVF survivors of ``probes_n`` against ``scan``
+    under the in-task centroids ``cent_rows`` — the one site that picks
+    the feeder, by the probe count a bounded take already yields."""
+    panel = probes_n.take(_PANEL_CAP + 1)
+    if len(panel) <= _PANEL_CAP:
+        return _panel_pairs(scan, panel, k, cent_rows, nprobe)
+    return _cogroup_pairs(probes_n, scan, cent_rows, k, nprobe)
 
 
 def _pairs_topk_window(pairs: DataFrame, k: int) -> DataFrame:
@@ -1259,148 +1314,6 @@ def _pairs_topk_window(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _batch_vec_matrix(batch, name: str, n_rows: int) -> np.ndarray:
-    """float64 (rows, dim) matrix of a list<float> column — flatten()
-    honors list offsets (embedding cells are non-null fixed-dim by
-    contract), so the reshape is safe; the widen is exact."""
-    return (
-        batch.column(name)
-        .flatten()
-        .to_numpy(zero_copy_only=False)
-        .reshape(n_rows, -1)
-        .astype(np.float64)
-    )
-
-
-def _panel_cells_topk(
-    cells: DataFrame,
-    panel_rows,
-    cent_rows,
-    k: int,
-    nprobe: int,
-) -> DataFrame:
-    """Serving-probe top-k over a prebuilt cell table with the panel
-    held in-task: probe→cell choice runs in driver numpy (the
-    `_nearest_centroids` replica), the cells scan STATICALLY prunes to
-    the probed cell partitions (PartitionFilters — stronger than the
-    r12 DPP subquery: no subquery job at all), and one MapInArrow pass
-    scores each cell row against exactly the probes that probed its
-    cell.  Zero joins; the only exchange is the final tiny rank."""
-    qids, qmat, qnorms = _rows_matrix(panel_rows)
-    cvids, cmat, cnorms = _rows_matrix(cent_rows)
-    probe_cells = _numpy_probe_cells(
-        qids, qmat, qnorms, cvids, cmat, cnorms, nprobe
-    )
-    cell_probes: dict[int, list[int]] = {}
-    for i, qid in enumerate(qids):
-        for cv in probe_cells[int(qid)]:
-            cell_probes.setdefault(cv, []).append(i)
-    scan = cells.filter(
-        F.col("cvid").isin(sorted(cell_probes))
-    ).select("cvid", "vid", "vec", "norm")
-
-    def score(batches):
-        for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
-                continue
-            cv = batch.column("cvid").to_numpy(zero_copy_only=False)
-            cid = batch.column("vid").to_numpy(zero_copy_only=False)
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            oq, oc, ocos, onull = [], [], [], []
-            for cell in np.unique(cv):
-                pidx = cell_probes.get(int(cell))
-                if not pidx:
-                    continue
-                rows = np.nonzero(cv == cell)[0]
-                csub, cnsub, cidsub = cm[rows], cn[rows], cid[rows]
-                for i in pidx:
-                    cos, isnull = _snapped_cos_block(
-                        qmat[i], qnorms[i], csub, cnsub
-                    )
-                    m = cidsub != qids[i]
-                    oq.append(np.full(int(m.sum()), qids[i], dtype=np.int64))
-                    oc.append(cidsub[m])
-                    ocos.append(cos[m])
-                    onull.append(isnull[m])
-            if oq and sum(len(a) for a in oq):
-                yield _emit_pairs_topk(
-                    np.concatenate(oq),
-                    np.concatenate(oc),
-                    np.concatenate(ocos),
-                    np.concatenate(onull),
-                    k,
-                )
-
-    pairs = scan.mapInArrow(score, "qid long, cid long, cosine double")
-    return _pairs_topk_window(pairs, k)
-
-
-def _corpus_panel_topk(
-    corpus_n: DataFrame,
-    cent_rows,
-    panel_rows,
-    k: int,
-    nprobe: int,
-) -> DataFrame:
-    """One-pass IVF top-k with centroids AND panel held in-task: each
-    scanned corpus row is assigned to its nearest centroid (the numpy
-    replica of `_nearest_centroids(..., 1)`: snapped cosine argmax,
-    ties → smaller cvid, all-NULL → smallest cvid) and, when that cell
-    is probed, scored against the cell's probes — so the whole verify
-    is ONE MapInArrow scan of the pinned normed corpus with no
-    assignment groupBy, no candidate join+distinct, and no per-pair
-    vector shuffle (the old path's three exchanges)."""
-    qids, qmat, qnorms = _rows_matrix(panel_rows)
-    cvids, cmat, cnorms = _rows_matrix(cent_rows)
-    probe_cells = _numpy_probe_cells(
-        qids, qmat, qnorms, cvids, cmat, cnorms, nprobe
-    )
-    cell_probes: dict[int, list[int]] = {}
-    for i, qid in enumerate(qids):
-        for cv in probe_cells[int(qid)]:
-            cell_probes.setdefault(cv, []).append(i)
-    scan = corpus_n.select("vid", "vec", "norm")
-
-    def score(batches):
-        for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
-                continue
-            cid = batch.column("vid").to_numpy(zero_copy_only=False)
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
-            bestc = _assign_block(cm, cn, cvids, cmat, cnorms)
-            oq, oc, ocos, onull = [], [], [], []
-            for cell in np.unique(bestc):
-                pidx = cell_probes.get(int(cell))
-                if not pidx:
-                    continue
-                rows = np.nonzero(bestc == cell)[0]
-                csub, cnsub, cidsub = cm[rows], cn[rows], cid[rows]
-                for i in pidx:
-                    cos, isnull = _snapped_cos_block(
-                        qmat[i], qnorms[i], csub, cnsub
-                    )
-                    m = cidsub != qids[i]
-                    oq.append(np.full(int(m.sum()), qids[i], dtype=np.int64))
-                    oc.append(cidsub[m])
-                    ocos.append(cos[m])
-                    onull.append(isnull[m])
-            if oq and sum(len(a) for a in oq):
-                yield _emit_pairs_topk(
-                    np.concatenate(oq),
-                    np.concatenate(oc),
-                    np.concatenate(ocos),
-                    np.concatenate(onull),
-                    k,
-                )
-
-    pairs = scan.mapInArrow(score, "qid long, cid long, cosine double")
-    return _pairs_topk_window(pairs, k)
-
-
 def _ivf_candidates(
     vectors: DataFrame,
     probes: DataFrame,
@@ -1408,45 +1321,23 @@ def _ivf_candidates(
     nprobe: int,
     id_col: str,
     vec_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """(candidates, corpus_n) — the IVF candidate-generation core
-    shared by :func:`ivf_topk` (exact-cosine verify) and
-    :func:`ivf_pq_topk` (ADC scoring): stride centroids, cell
-    assignment, nprobe probe cells, deduplicated (qid, cid) pairs
-    with self-matches excluded. Factored so the Spark side cannot
-    drift between the two, mirroring the shared `_O_IVF_CAND` oracle
-    fragment. The pinned normed corpus is returned for callers whose
-    scoring pass needs it (the IVF verify); the pin is ledger-managed
-    like every other.
-
-    r13: panel-sized probe batches against cap-bounded centroid sets
-    generate candidates in ONE in-task pass (_panel_candidates_arrow)
-    — no assignment groupBy, no probe-cell window, no join+distinct;
-    over-cap inputs keep the join form."""
+    k: int | None = None,
+) -> DataFrame:
+    """(qid, cid, cosine) IVF pairs under the stride quantizer — the
+    candidate core shared by :func:`ivf_topk` (``k`` = its top-k) and
+    :func:`ivf_pq_topk` (``k=None``: every pair in the probed cells,
+    for ADC scoring), so the two cannot drift, mirroring the shared
+    `_O_IVF_CAND` oracle fragment.  One cell per vid makes the pairs
+    unique; self-matches are excluded.  The normed corpus is pinned
+    because both the centroid collect and the scoring scan read it."""
     from .caching import pin
 
     corpus_n = pin(_normed(vectors, id_col, vec_col))
-    cents_n = corpus_n.filter(F.col("vid") % centroid_stride == 0)
-    probes_n = _normed(probes, id_col, vec_col)
-    panel = probes_n.take(_PANEL_CAP + 1)
-    if 0 < len(panel) <= _PANEL_CAP:
-        cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-        if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-            return (
-                _panel_candidates_arrow(corpus_n, cent_rows, panel, nprobe),
-                corpus_n,
-            )
-    assign = _nearest_centroids(corpus_n, cents_n, 1)
-    probe_cells = _nearest_centroids(
-        probes_n, cents_n, nprobe
-    ).withColumnRenamed("vid", "qid")
-    candidates = (
-        probe_cells.join(assign, "cvid")
-        .filter(F.col("vid") != F.col("qid"))
-        .select("qid", F.col("vid").alias("cid"))
-        .distinct()
+    cent_rows = _centroid_rows(
+        corpus_n.filter(F.col("vid") % centroid_stride == 0)
     )
-    return candidates, corpus_n
+    probes_n = _normed(probes, id_col, vec_col)
+    return _ivf_pairs(probes_n, corpus_n, cent_rows, nprobe, k)
 
 
 def ivf_topk(
@@ -1466,54 +1357,31 @@ def ivf_topk(
 
     Same output contract as :func:`brute_force_topk`
     (query_id, neighbor_id, rank, cosine; self-matches excluded), but
-    per-probe work is ~nprobe/cells of the corpus. At 100 TB the cell
-    assignment is the only corpus-wide pass and it broadcasts just the
-    centroid set; the probe-side join shuffles on cell id, which is
-    uniformly loaded when ids are hash-distributed. Note the stride
+    per-probe work is ~nprobe/cells of the corpus.  Note the stride
     quantizer's centroid count grows as corpus/stride, making the
-    assign pass quadratic at scale — the PRODUCTION path is
+    in-task assignment quadratic at scale — the PRODUCTION path is
     :func:`ivf_topk_trained`, whose Lloyd-trained quantizer sizes
     cells ≈ √N (the measured 2.6×-at-x10 fix, SCALE.md); this
     fixed-stride form stays registered as the simpler scale-ramp
     subject.
 
-    The normed corpus is persisted ONCE and consumed by all three
-    norm-hungry branches (cell assign, centroid set, pair verify) —
-    without the pin each branch re-derives the map-side norm over the
-    whole corpus, a ~2× constant-factor regression measured at sf0.1.
-
-    r13: when the probe panel and centroid set are cap-bounded, the
-    whole verify collapses to :func:`_corpus_panel_topk` — ONE
-    MapInArrow pass over the pinned corpus (in-task assignment +
-    panel scoring), no assignment groupBy, no candidate join+distinct,
-    no per-pair vector shuffle.  Over-cap inputs (e.g. this stride
-    quantizer's corpus/stride centroid growth at extreme scale) keep
-    the join/window form below.
+    Scoring is :func:`_ivf_pairs`: a probe panel scores during ONE
+    mapInArrow pass over the pinned corpus (in-task assignment + panel
+    scoring); a larger probe set co-groups with the corpus by cell.
     """
-    from .caching import pin
-
-    corpus_n = pin(_normed(vectors, id_col, vec_col))
-    probes_n = _normed(probes, id_col, vec_col)
-    panel = probes_n.take(_PANEL_CAP + 1)
-    cents_n = corpus_n.filter(F.col("vid") % centroid_stride == 0)
-    if 0 < len(panel) <= _PANEL_CAP:
-        cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-        if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-            return _corpus_panel_topk(corpus_n, cent_rows, panel, k, nprobe)
-    candidates, corpus_n = _ivf_candidates(
-        vectors, probes, centroid_stride, nprobe, id_col, vec_col
+    pairs = _ivf_candidates(
+        vectors, probes, centroid_stride, nprobe, id_col, vec_col, k
     )
-    pairs = _cosine_for_pairs_normed(candidates, corpus_n)
     return _pairs_topk_window(pairs, k)
 
 
 def _centroid_arrays(cq: DataFrame) -> DataFrame:
     """(vid, vec, norm) array form of a long-form QUANTIZED centroid
-    table (cvid, pos, cq BIGINT on the 1e6 grid) — the normed shape
-    :func:`_nearest_centroids` consumes.  Component values are
-    ``cq / 1e6`` doubles: both engines derive them with the same IEEE
-    long→double divide, so the arrays (and every downstream snapped
-    dot) replay bit-identically in the SQL oracle."""
+    table (cvid, pos, cq BIGINT on the 1e6 grid) — the normed shape the
+    in-task scorers collect.  Component values are ``cq / 1e6``
+    doubles: both engines derive them with the same IEEE long→double
+    divide, so the arrays (and every downstream snapped dot) replay
+    bit-identically in the SQL oracle."""
     arr = (
         cq.select(
             "cvid",
@@ -1536,14 +1404,11 @@ def _centroid_arrays(cq: DataFrame) -> DataFrame:
 def _lloyd_update_arrow(corpus_n: DataFrame, cent_rows) -> DataFrame:
     """One Lloyd update as in-task assignment + PARTIAL per-cell sums
     (guide §2.3 — aggregate before the exchange): each task assigns its
-    corpus rows to the in-closure centroids (`_assign_block`, the
-    proven `_nearest_centroids` replica), accumulates exact int64
-    component sums + member counts per cell across ALL its batches,
-    and emits one cells×dim partial block — so the shuffle carries
-    tasks×cells×dim tiny rows instead of the old corpus-wide
-    elq⋈assign join (N·dim rows through a vid-keyed exchange).  The
-    final floor(SUM/COUNT) is the byte-identical old expression over
-    byte-identical exact sums."""
+    corpus rows to the in-closure centroids (`_assign_block`),
+    accumulates exact int64 component sums + member counts per cell
+    across ALL its batches, and emits one cells×dim partial block — so
+    the shuffle carries tasks×cells×dim tiny rows, never the corpus.
+    The final floor(SUM/COUNT) over exact sums is order-independent."""
     cvids, cmat, cnorms = _rows_matrix(cent_rows)
 
     def agg(batches):
@@ -1552,14 +1417,12 @@ def _lloyd_update_arrow(corpus_n: DataFrame, cent_rows) -> DataFrame:
         sums: dict[int, np.ndarray] = {}
         counts: dict[int, int] = {}
         for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
+            if batch.num_rows == 0:
                 continue
-            cm = _batch_vec_matrix(batch, "vec", n_rows)
-            cn = batch.column("norm").to_numpy(zero_copy_only=False)
+            _, cm, cn = _batch_block(batch)
             bestc = _assign_block(cm, cn, cvids, cmat, cnorms)
-            # the same floor(val·1e6) quantization the exploded elq
-            # table carried — exact int64 sums are order-independent
+            # the floor(val·1e6) quantization of the oracle's element
+            # table — exact int64 sums are order-independent
             q = np.floor(cm * DOT_SCALE).astype(np.int64)
             for cell in np.unique(bestc):
                 rows = bestc == cell
@@ -1613,10 +1476,11 @@ def train_ivf_centroids(
 ) -> DataFrame:
     """Deterministic Lloyd-trained coarse quantizer with ≈√N cells —
     the PRODUCTION centroid builder (the stride quantizer's centroid
-    count grows as corpus/stride; √N cells keep both the broadcast
-    and the O(N·cells) assign pass bounded, measured 2.6× faster at
-    x10 in SCALE.md).  Returns the trained centroid set in normed
-    array form (vid, vec, norm) for :func:`_nearest_centroids`.
+    count grows as corpus/stride; √N cells keep both the in-task
+    centroid set and the O(N·cells) assign pass bounded, measured 2.6×
+    faster at x10 in SCALE.md).  Returns the trained centroid set in
+    normed array form (vid, vec, norm), the shape every IVF verb
+    collects.
 
     Every arithmetic step is snapped so a SQL oracle replays the
     trained centroids bit for bit — unlike ``pyspark.ml`` KMeans
@@ -1629,24 +1493,25 @@ def train_ivf_centroids(
       ``vid % stride == 0`` rule silently returns ZERO seeds when the
       training ids and the stride share a factor — e.g. training on
       the ``vid % 3 != 0`` split with a stride divisible by 3, the
-      round-8 incremental-ingest configuration — and misweights
-      sparse/hashed id spaces generally.)  The rank window is one
-      vocabulary-sized pass inside the trainer, which at 100 TB runs
-      on a bounded sample anyway (see below);
+      incremental-ingest configuration — and misweights sparse/hashed
+      id spaces generally.)  The rank window is one vocabulary-sized
+      pass inside the trainer, which at 100 TB runs on a bounded
+      sample anyway (see below);
     * assignment: snapped-cosine argmax (ties → smaller centroid id),
-      the same broadcast map-side pass as serving;
+      the same in-task pass as serving;
     * update: per (cell, pos), ``cq = FLOOR(SUM(q)/COUNT)`` over the
       members' floor-quantized components ``q = FLOOR(val·1e6)`` —
       exact BIGINT sums, one correctly-rounded double divide, so
       means are order-independent and engine-identical.
 
-    The corpus size ``N`` is one driver-side scalar count (the
-    trainer's only sync point, like the BPE trainer's per-merge row);
-    each of the ``iters`` Lloyd rounds is one broadcast assign + one
-    (cell, pos)-keyed aggregate — at 100 TB train on a bounded sample
-    (pass ``vectors.sample(...)``; assignment quality needs only
-    representative density, not every row).  Cells that empty out
-    during an update simply drop (k only ever shrinks by ties).
+    The corpus size ``N`` is one driver-side scalar count; each of the
+    ``iters`` Lloyd rounds is ONE job — the current centroids are
+    collected and `_lloyd_update_arrow` assigns and sums in-task —
+    plus the (cell, pos)-keyed merge of the partial sums.  At 100 TB
+    train on a bounded sample (pass ``vectors.sample(...)``;
+    assignment quality needs only representative density, not every
+    row).  Cells that empty out during an update simply drop (k only
+    ever shrinks by ties).
     """
     from .caching import pin
 
@@ -1663,66 +1528,27 @@ def train_ivf_centroids(
         .filter((F.col("rn") - 1) % stride == 0)
         .select("vid")
     )
-    # r13 fast path: with √N cells under the cap, each Lloyd round is
-    # ONE job — `_lloyd_update_arrow` (in-task assignment + partial
-    # per-cell sums) collected via a k0-row take of its array form —
-    # instead of the broadcast-scored assignment window + the exploded
-    # corpus join + the (cvid, pos) aggregate.  Seeds quantize the
-    # SAME floor(val·1e6) components the exploded path carried; the
-    # byte-identity of every step is argued at each helper and pinned
-    # by the trained-family oracles.
-    if k0 < _SCORER_CENTROID_CAP:
-        cq = (
-            corpus_n.join(F.broadcast(seed_ids), "vid")
-            .select(
-                F.col("vid").alias("cvid"),
-                F.posexplode("vec").alias("pos0", "val"),
-            )
-            .select(
-                "cvid",
-                (F.col("pos0") + 1).alias("pos"),
-                F.floor(F.col("val").cast("double") * DOT_SCALE)
-                .cast("long")
-                .alias("cq"),
-            )
+    # seeds quantize the members' floor(val·1e6) components, the same
+    # grid every Lloyd update produces
+    cq = (
+        corpus_n.join(F.broadcast(seed_ids), "vid")
+        .select(
+            F.col("vid").alias("cvid"),
+            F.posexplode("vec").alias("pos0", "val"),
         )
-        fast = True
-        for _ in range(iters):
-            cent_rows = _centroid_arrays(cq).take(_SCORER_CENTROID_CAP + 1)
-            if len(cent_rows) > _SCORER_CENTROID_CAP:  # pragma: no cover
-                fast = False
-                break
-            if not cent_rows:
-                break
-            cq = _lloyd_update_arrow(corpus_n, cent_rows)
-        if fast:
-            return _centroid_arrays(cq)
-    el = corpus_n.select(
-        "vid", F.posexplode("vec").alias("pos0", "val")
-    ).select("vid", (F.col("pos0") + 1).alias("pos"), F.col("val").cast("double").alias("val"))
-    elq = pin(
-        el.select(
-            "vid", "pos", F.floor(F.col("val") * DOT_SCALE).cast("long").alias("q")
+        .select(
+            "cvid",
+            (F.col("pos0") + 1).alias("pos"),
+            F.floor(F.col("val").cast("double") * DOT_SCALE)
+            .cast("long")
+            .alias("cq"),
         )
-    )
-    cq = elq.join(F.broadcast(seed_ids), "vid").select(
-        F.col("vid").alias("cvid"), "pos", F.col("q").alias("cq")
     )
     for _ in range(iters):
-        cents_n = pin(_centroid_arrays(cq))
-        assign = _nearest_centroids(corpus_n, cents_n, 1)
-        cq = pin(
-            elq.join(assign, "vid")
-            .groupBy("cvid", "pos")
-            .agg(
-                F.floor(
-                    F.sum("q").cast("double")
-                    / F.count(F.lit(1)).cast("double")
-                )
-                .cast("long")
-                .alias("cq")
-            )
-        )
+        cent_rows = _centroid_rows(_centroid_arrays(cq))
+        if not cent_rows:
+            break
+        cq = _lloyd_update_arrow(corpus_n, cent_rows)
     return _centroid_arrays(cq)
 
 
@@ -1741,9 +1567,10 @@ def ivf_topk_trained(
     (:func:`train_ivf_centroids`) — the production one-shot form.
     Same output contract as :func:`ivf_topk` (query_id, neighbor_id,
     rank, cosine; self-matches excluded); per-probe work is
-    ~nprobe·√N corpus rows, and the centroid broadcast stays √N-sized
-    at any corpus scale (the structural fix to the stride quantizer's
-    corpus/stride centroid growth).
+    ~nprobe·√N corpus rows, and the in-task centroid set stays
+    √N-sized at any corpus scale (the structural fix to the stride
+    quantizer's corpus/stride centroid growth).  Scoring is
+    :func:`_ivf_pairs` over the pinned normed corpus.
 
     ``nprobe_frac`` overrides ``nprobe`` with ``ceil(frac · √N)`` — a
     RECALL-TARGETED probe budget that holds the searched fraction of
@@ -1774,34 +1601,27 @@ def ivf_topk_trained(
         nprobe = math.ceil(nprobe_frac * max(1, math.floor(math.sqrt(n))))
     assert nprobe is not None
     corpus_n = pin(_normed(vectors, id_col, vec_col))
-    cents_n = pin(
+    cent_rows = _centroid_rows(
         train_ivf_centroids(
             vectors, iters=iters, id_col=id_col, vec_col=vec_col,
             corpus_n=corpus_n, n=n,
         )
     )
     probes_n = _normed(probes, id_col, vec_col)
-    # r13: trained centroids are √N-bounded and a probe batch is a
-    # panel — when both fit the caps the verify is ONE MapInArrow pass
-    # over the pinned corpus (see _corpus_panel_topk); the join/window
-    # form below remains for over-cap inputs
-    panel = probes_n.take(_PANEL_CAP + 1)
-    if 0 < len(panel) <= _PANEL_CAP:
-        cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-        if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-            return _corpus_panel_topk(corpus_n, cent_rows, panel, k, nprobe)
-    assign = _nearest_centroids(corpus_n, cents_n, 1)
-    probe_cells = _nearest_centroids(
-        probes_n, cents_n, nprobe
-    ).withColumnRenamed("vid", "qid")
-    candidates = (
-        probe_cells.join(assign, "cvid")
-        .filter(F.col("vid") != F.col("qid"))
-        .select("qid", F.col("vid").alias("cid"))
-        .distinct()
-    )
-    pairs = _cosine_for_pairs_normed(candidates, corpus_n)
+    pairs = _ivf_pairs(probes_n, corpus_n, cent_rows, nprobe, k)
     return _pairs_topk_window(pairs, k)
+
+
+def _assign_to_index(vectors_n: DataFrame, cent_rows, index_dir: str) -> DataFrame:
+    """`_assign_cells_arrow` for rows bound for an index: a vector
+    without any centroid has no cell to land in, so a non-empty batch
+    against an empty centroid set raises instead of vanishing."""
+    if not cent_rows and not vectors_n.isEmpty():
+        raise ValueError(
+            f"IVF index {index_dir!r} has no centroids: its vectors have "
+            "no cell to land in (rebuild it from a non-empty corpus)"
+        )
+    return _assign_cells_arrow(vectors_n, cent_rows)
 
 
 def build_ivf_index(
@@ -1829,7 +1649,12 @@ def build_ivf_index(
     ``centroids_n`` (a normed (vid, vec, norm) table, e.g. from
     :func:`train_ivf_centroids`) overrides the stride quantizer —
     the production build passes trained √N cells so the on-disk
-    partition count stays √N-sized at any corpus scale."""
+    partition count stays √N-sized at any corpus scale.
+
+    The centroid set is collected and held in-task, so assignment is
+    one corpus pass straight into the partitioned write.  An empty
+    corpus builds an empty index; a non-empty corpus without any
+    centroid raises ValueError."""
     from .caching import pin
 
     corpus_n = pin(_normed(vectors, id_col, vec_col))
@@ -1838,17 +1663,8 @@ def build_ivf_index(
         if centroids_n is not None
         else corpus_n.filter(F.col("vid") % centroid_stride == 0)
     )
-    # r13: cap-bounded centroid sets assign IN-TASK — one corpus pass
-    # straight into the partitioned write, instead of the broadcast
-    # scoring + assignment groupBy + corpus re-join (two exchanges)
-    cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-    if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-        assigned = _assign_cells_arrow(corpus_n, cent_rows)
-    else:
-        assign = _nearest_centroids(corpus_n, cents_n, 1)
-        assigned = corpus_n.join(assign, "vid")
     (
-        assigned
+        _assign_to_index(corpus_n, _centroid_rows(cents_n), index_dir)
         # `src` labels the LOAD that wrote each row: 'base' for the
         # initial build, one label per append — the second partition
         # level that makes incremental ingest idempotent (see
@@ -2100,62 +1916,24 @@ def ivf_probe_index(
     """PROBE-MANY half: same output contract as :func:`ivf_topk`
     (query_id, neighbor_id, rank, cosine; self-matches excluded), but
     against a prebuilt :func:`build_ivf_index` — the centroid read is
-    tiny, the per-probe cell choice broadcasts, and the cells scan
-    partition-prunes to the probed cells (plan-gated in
-    tests/test_plans.py).
+    tiny and held in-task, and the cells scan reads only the probed
+    cells (plan-gated in tests/test_plans.py).
 
-    r13: a serving probe batch is a PANEL by design (the declared
-    serving queries probe a fixed 50-id set at every scale), so when
-    panel and centroid set fit the caps the probe runs as
-    :func:`_panel_cells_topk` — probe→cell choice in driver numpy, the
-    cells scan statically pruned to the probed partitions
-    (PartitionFilters, no DPP subquery job), one MapInArrow scoring
-    pass, zero joins.  Over-cap batches keep the r12 DPP join form
-    below."""
-    cents_n = spark.read.parquet(index_dir + "/centroids")
-    probes_n = _normed(probes, id_col, vec_col)
-    cells = spark.read.parquet(index_dir + "/cells")
-    panel = probes_n.take(_PANEL_CAP + 1)
-    if 0 < len(panel) <= _PANEL_CAP:
-        cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-        if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-            return _panel_cells_topk(cells, panel, cent_rows, k, nprobe)
-    probe_cells = _nearest_centroids(probes_n, cents_n, nprobe).withColumnRenamed(
-        "vid", "qid"
-    )
-    # candidates CARRY the cell id: the verify join below keys on
-    # (cvid, cid), so the WIDE cells scan (the one reading the vector
-    # payload) partition-prunes to the probed cells exactly like the
-    # narrow candidate scan — before r12 it joined on cid alone and
-    # read every cell's vectors (full-index IO per probe batch at
-    # 100 TB; the narrow scan pruned, the heavy one did not).  A vid
-    # lives in exactly one cell (disjoint-id append contract), so the
-    # (qid, cvid, cid) distinct collapses the same pairs as before.
-    candidates = (
-        probe_cells.join(cells.select("cvid", "vid"), "cvid")
-        .filter(F.col("vid") != F.col("qid"))
-        .select("qid", "cvid", F.col("vid").alias("cid"))
-        .distinct()
-    )
-    q = _as_prefix(probes_n, "q").select("qid", "qvec", "qnorm")
-    c = cells.select(
-        "cvid",
-        F.col("vid").alias("cid"),
-        F.col("vec").alias("cvec"),
-        F.col("norm").alias("cnorm"),
-    )
-    pairs = (
-        candidates.join(q, "qid")
-        .join(c, ["cvid", "cid"])
-        .select(
-            "qid",
-            "cid",
-            _cosine(
-                dot_dec_batch(F.col("qvec"), F.col("cvec")),
-                F.col("qnorm"),
-                F.col("cnorm"),
-            ).alias("cosine"),
-        )
+    Scoring is :func:`_ivf_pairs`.  A serving probe batch is a panel by
+    design (the declared serving queries probe a fixed 50-id set at
+    every scale): probe→cell choice runs in driver numpy, the cells
+    scan is statically pruned to the probed partitions
+    (PartitionFilters, no subquery job), and one mapInArrow pass
+    scores it — zero joins.  A larger batch co-groups with the cells
+    by cell id after a left-semi on the probed cells, so dynamic
+    partition pruning limits the scan instead."""
+    cent_rows = _centroid_rows(spark.read.parquet(index_dir + "/centroids"))
+    pairs = _ivf_pairs(
+        _normed(probes, id_col, vec_col),
+        _read_cells(spark, index_dir),
+        cent_rows,
+        nprobe,
+        k,
     )
     return _pairs_topk_window(pairs, k)
 
@@ -2174,8 +1952,8 @@ def ivf_index_append(
     add-after-train).
 
     The append never reads, rewrites, or re-sorts existing cells: cost
-    is one O(batch · cells) broadcast assignment (the same map-side
-    pass serving uses) plus one cell-partitioned parquet append, so
+    is one O(batch · cells) in-task assignment (the same pass the
+    build uses) plus one cell-partitioned parquet append, so
     continuously-arriving embeddings ingest at BATCH cost while every
     previously-indexed byte stays in place.  Centroids are frozen, not
     retrained — assignment depends only on the centroid set, so
@@ -2198,18 +1976,16 @@ def ivf_index_append(
     is deterministic given the frozen centroids, so replay converges
     to the same bytes and the ingest is exactly-once WITHOUT a ledger
     or any rewrite of other loads' data.
+
+    An index without centroids (built from an empty corpus) cannot
+    place a vector: a non-empty batch raises ValueError.
     """
     import uuid as _uuid
 
-    cents_n = spark.read.parquet(index_dir + "/centroids")
-    batch_n = _normed(new_vectors, id_col, vec_col)
-    # r13: same in-task assignment as build_ivf_index — one batch pass
-    cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-    if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-        assigned = _assign_cells_arrow(batch_n, cent_rows)
-    else:
-        assign = _nearest_centroids(batch_n, cents_n, 1)
-        assigned = batch_n.join(assign, "vid")
+    cent_rows = _centroid_rows(spark.read.parquet(index_dir + "/centroids"))
+    assigned = _assign_to_index(
+        _normed(new_vectors, id_col, vec_col), cent_rows, index_dir
+    )
     label = src if src is not None else _uuid.uuid4().hex[:12]
     (
         assigned
@@ -2303,7 +2079,7 @@ def compact_ivf_index(spark, index_dir: str) -> tuple[int, int]:
         ],
         "src string, __load_seq long, __load_mtime double",
     )
-    cells = spark.read.parquet(cells_path).join(F.broadcast(order), "src")
+    cells = _read_cells(spark, index_dir).join(F.broadcast(order), "src")
     before = cells.count()
     w = W.partitionBy("vid").orderBy(
         F.desc("__load_seq"), F.desc("__load_mtime"), F.desc("src"),
@@ -2337,7 +2113,7 @@ def compact_ivf_index(spark, index_dir: str) -> tuple[int, int]:
     # everything now lives under src=base: restart the append sequence
     # from it so the next append sorts strictly after the compacted set
     _record_load(index_dir, "base", reset=True)
-    return before, spark.read.parquet(cells_path).count()
+    return before, _read_cells(spark, index_dir).count()
 
 
 def _uuid_hex() -> str:
@@ -2877,38 +2653,32 @@ def semantic_dedup_pairs(
     O(n · stride), not O(n²).
 
     Honest scale caveat: the stride centroid set itself grows as
-    n/stride, so the ASSIGN pass here is O(n²/stride) and the centroid
-    broadcast is unbounded — fine at test scale and for the DuckDB
+    n/stride, so the ASSIGN pass here is O(n²/stride) and the in-task
+    centroid set is unbounded — fine at test scale and for the DuckDB
     oracle, but a 100 TB run must swap in a BOUNDED centroid set:
     :func:`train_ivf_centroids` (the oracle-replayable Lloyd trainer
     that fixed exactly this for :func:`ivf_topk` — √N cells make
-    assignment O(n·√n) with a √N-row broadcast), or
+    assignment O(n·√n) with √N in-task centroids), or
     analytics/predictive.kmeans_embedding_clusters when oracle parity
     isn't needed. Everything downstream of `assign` is unchanged
     either way.
 
-    Plan shape: one persisted normed corpus feeds centroid scoring,
-    cell assignment, and the pair verify (same single-norm-pass rule
-    as :func:`ivf_topk`); the within-cell self-join shuffles on the
-    cell id (hot-cell caveat and its sub-clustering fix as documented
-    for blocking in operators/dedup.py).
+    Plan shape: one persisted normed corpus feeds the centroid
+    collect, the in-task cell assignment, and the pair verify (same
+    single-norm-pass rule as :func:`ivf_topk`); the within-cell
+    self-join shuffles on the cell id (hot-cell caveat and its
+    sub-clustering fix as documented for blocking in
+    operators/dedup.py).
     """
     from .caching import pin
 
     corpus_n = pin(_normed(vectors, id_col, vec_col))
-    cents_n = corpus_n.filter(F.col("vid") % centroid_stride == 0)
-    # r13: cap-bounded centroid sets assign in-task (one corpus pass,
-    # no broadcast scoring + groupBy); the within-cell pair join below
-    # is unchanged either way
-    cent_rows = cents_n.take(_SCORER_CENTROID_CAP + 1)
-    if 0 < len(cent_rows) <= _SCORER_CENTROID_CAP:
-        # both self-join sides read the SAME exchange of this subtree
-        # (ReuseExchange), so no pin — the measured same-exchange rule
-        assign = _assign_cells_arrow(corpus_n, cent_rows).select(
-            "vid", "cvid"
-        )
-    else:
-        assign = _nearest_centroids(corpus_n, cents_n, 1)
+    cent_rows = _centroid_rows(
+        corpus_n.filter(F.col("vid") % centroid_stride == 0)
+    )
+    # both self-join sides read the SAME exchange of this subtree
+    # (ReuseExchange), so no pin — the measured same-exchange rule
+    assign = _assign_cells_arrow(corpus_n, cent_rows).select("vid", "cvid")
     a, b = assign.alias("a"), assign.alias("b")
     pairs = a.join(
         b,
@@ -3154,7 +2924,7 @@ def ivf_assignment_drift(
     * retrain √N Lloyd centroids over the CURRENT indexed corpus
       (same deterministic trainer serving uses);
     * re-assign every indexed vector to the retrained cells
-      (one broadcast map-side pass, the serving plan shape);
+      (one in-task pass, the serving assignment);
     * count the vectors whose retrained cell population differs from
       their frozen cell population — computed as a CELL-PAIR
       confusion table so the metric is stable under arbitrary
@@ -3172,11 +2942,11 @@ def ivf_assignment_drift(
     in round 11; pytest-pinned now).
 
     Scale: the retrain is the trainer's documented bounded cost (√N
-    cells, iters broadcast-assign passes); the confusion table is
+    cells, iters in-task assign passes); the confusion table is
     cells×cells AT MOST and in practice near-diagonal; nothing
     corpus-sized shuffles except the one (cell,cell) keyed count.
     """
-    cells = spark.read.parquet(index_dir.rstrip("/") + "/cells").select(
+    cells = _read_cells(spark, index_dir).select(
         "vid", "vec", "norm", F.col("cvid").alias("frozen_cvid")
     )
     corpus_n = cells.select("vid", "vec", "norm")
@@ -3190,8 +2960,8 @@ def ivf_assignment_drift(
     cents2 = train_ivf_centroids(
         raw, iters=iters, id_col=id_col, vec_col=vec_col, n=n
     )
-    assign2 = _nearest_centroids(corpus_n, cents2, 1).withColumnRenamed(
-        "cvid", "retrained_cvid"
+    assign2 = _assign_cells_arrow(corpus_n, _centroid_rows(cents2)).select(
+        "vid", F.col("cvid").alias("retrained_cvid")
     )
     pairs = cells.select("vid", "frozen_cvid").join(assign2, "vid")
     confusion = pairs.groupBy("frozen_cvid", "retrained_cvid").agg(

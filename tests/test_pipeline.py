@@ -4,6 +4,7 @@ the right THING)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from business_intelligence_and_data_warehouse_spark.operators.dedup import (
@@ -1183,7 +1184,7 @@ def test_ivf_cached_copy_is_fresh_and_seq_guard_skips_remote(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r13 collected-panel Arrow scorers: parity pins
+# IVF scoring kernel: parity pins against the JVM references
 # ---------------------------------------------------------------------------
 
 def _tricky_vecs(spark):
@@ -1205,12 +1206,82 @@ def _tricky_vecs(spark):
     )
 
 
+def _nearest_centroids(vectors_n, centroids_n, n: int):
+    """JVM reference: (vid, cvid) of each normed vector's n nearest
+    normed centroids by snapped cosine, ranked (cosine DESC NULLS LAST,
+    cvid ASC) — a broadcast join scored with `dot_dec_batch`.  n == 1
+    is a partial-aggregated argmax: max(struct(cosine, -cvid)) picks
+    the highest cosine, tie -> smaller cvid, and a NULL cosine sorts
+    below every non-null struct."""
+    from pyspark.sql import Window as W
+
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        _as_prefix,
+        _cosine,
+        dot_dec_batch,
+    )
+
+    c = _as_prefix(vectors_n, "c")
+    p = _as_prefix(centroids_n, "q")
+    scored = c.join(F.broadcast(p)).select(
+        F.col("cid").alias("vid"),
+        F.col("qid").alias("cvid"),
+        _cosine(
+            dot_dec_batch(F.col("qvec"), F.col("cvec")),
+            F.col("qnorm"),
+            F.col("cnorm"),
+        ).alias("cosine"),
+    )
+    if n == 1:
+        return (
+            scored.groupBy("vid")
+            .agg(
+                F.max(
+                    F.struct(
+                        F.col("cosine").alias("cos"),
+                        (-F.col("cvid")).alias("neg"),
+                    )
+                ).alias("best")
+            )
+            .select("vid", (-F.col("best.neg")).alias("cvid"))
+        )
+    w = W.partitionBy("vid").orderBy(F.desc("cosine"), F.col("cvid"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
+        .select("vid", "cvid")
+    )
+
+
+def _join_ivf_topk(corpus_n, cents_n, probes_n, k: int, nprobe: int):
+    """JVM reference for the IVF verify of probes drawn from the
+    corpus: cell assignment and probe cells by `_nearest_centroids`,
+    candidates by a cell join, exact cosine by the pair join, rank by
+    the shared final window."""
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        _cosine_for_pairs_normed,
+        _pairs_topk_window,
+    )
+
+    assign = _nearest_centroids(corpus_n, cents_n, 1)
+    probe_cells = _nearest_centroids(
+        probes_n, cents_n, nprobe
+    ).withColumnRenamed("vid", "qid")
+    candidates = (
+        probe_cells.join(assign, "cvid")
+        .filter(F.col("vid") != F.col("qid"))
+        .select("qid", F.col("vid").alias("cid"))
+        .distinct()
+    )
+    # the probes are corpus rows, so one normed table serves both ids
+    return _pairs_topk_window(_cosine_for_pairs_normed(candidates, corpus_n), k)
+
+
 def test_numpy_probe_cells_matches_nearest_centroids(spark):
     """The driver-numpy probe->cell choice must replicate
     `_nearest_centroids` bit for bit, including the NULL-cosine
     (zero-norm) and cosine-tie orderings, at n=1 and n>1."""
     from business_intelligence_and_data_warehouse_spark.operators.similarity import (
-        _nearest_centroids,
         _normed,
         _numpy_probe_cells,
         _rows_matrix,
@@ -1222,7 +1293,8 @@ def test_numpy_probe_cells_matches_nearest_centroids(spark):
     qids, qmat, qnorms = _rows_matrix(corpus_n.collect())
     cvids, cmat, cnorms = _rows_matrix(cents_n.collect())
     for n in (1, 2):
-        got = _numpy_probe_cells(qids, qmat, qnorms, cvids, cmat, cnorms, n)
+        cells = _numpy_probe_cells(qmat, qnorms, cvids, cmat, cnorms, n)
+        got = {int(q): [int(c) for c in row] for q, row in zip(qids, cells)}
         jvm = _nearest_centroids(corpus_n, cents_n, n).collect()
         want: dict[int, list[int]] = {}
         for r in jvm:
@@ -1231,20 +1303,21 @@ def test_numpy_probe_cells_matches_nearest_centroids(spark):
 
 
 def test_panel_scorer_matches_join_path(spark, tmp_path):
-    """End-to-end pin: the collected-panel Arrow fast paths of
-    ivf_topk / ivf_topk_trained / ivf_probe_index must return
-    EXACTLY the rows of the join/window fallback (forced via the
-    panel cap) on the edge-case corpus."""
-    import pytest
-
+    """End-to-end pin: both feeders of the IVF scoring kernel — the
+    probe panel and, with the panel cap forced to 0, the cell cogroup
+    — must return EXACTLY the rows of the JVM join reference for
+    ivf_topk / ivf_topk_trained / ivf_probe_index on the tie- and
+    NULL-norm corpus."""
     from business_intelligence_and_data_warehouse_spark.operators import (
         similarity as sim,
     )
     from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        _normed,
         build_ivf_index,
         ivf_probe_index,
         ivf_topk,
         ivf_topk_trained,
+        train_ivf_centroids,
     )
 
     vecs = _tricky_vecs(spark)
@@ -1252,37 +1325,35 @@ def test_panel_scorer_matches_join_path(spark, tmp_path):
     index_dir = str(tmp_path / "ivf")
     build_ivf_index(vecs, index_dir, centroid_stride=3)
 
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
     def run():
         return [
-            sorted(
-                tuple(r)
-                for r in ivf_topk(
-                    vecs, probes, k=5, centroid_stride=3, nprobe=2
-                ).collect()
-            ),
-            sorted(
-                tuple(r)
-                for r in ivf_topk_trained(
-                    vecs, probes, k=5, iters=1, nprobe=2
-                ).collect()
-            ),
-            sorted(
-                tuple(r)
-                for r in ivf_probe_index(
-                    spark, index_dir, probes, k=5, nprobe=2
-                ).collect()
-            ),
+            rows(ivf_topk(vecs, probes, k=5, centroid_stride=3, nprobe=2)),
+            rows(ivf_topk_trained(vecs, probes, k=5, iters=1, nprobe=2)),
+            rows(ivf_probe_index(spark, index_dir, probes, k=5, nprobe=2)),
         ]
 
-    fast = run()
+    corpus_n = _normed(vecs, "vec_id", "embedding")
+    probes_n = _normed(probes, "vec_id", "embedding")
+    stride_cents = corpus_n.filter(F.col("vid") % 3 == 0)
+    trained_cents = train_ivf_centroids(vecs, iters=1)
+    reference = [
+        rows(_join_ivf_topk(corpus_n, stride_cents, probes_n, 5, 2)),
+        rows(_join_ivf_topk(corpus_n, trained_cents, probes_n, 5, 2)),
+        rows(_join_ivf_topk(corpus_n, stride_cents, probes_n, 5, 2)),
+    ]
+    panel = run()
     mp = pytest.MonkeyPatch()
     try:
         mp.setattr(sim, "_PANEL_CAP", 0)
-        slow = run()
+        cogroup = run()
     finally:
         mp.undo()
-    assert fast == slow
-    assert all(len(x) > 0 for x in fast)
+    assert panel == reference
+    assert cogroup == reference
+    assert all(len(x) > 0 for x in reference)
 
 
 def test_ivf_cells_stay_vid_disjoint_across_append(spark, tmp_path):
@@ -1315,6 +1386,164 @@ def test_ivf_cells_stay_vid_disjoint_across_append(spark, tmp_path):
         .collect()
     )
     assert dup == [], f"vids in more than one cell row: {dup}"
+
+
+_TOPK_COLS = ["query_id", "neighbor_id", "rank", "cosine"]
+_EMPTY_INPUT_CASES = [
+    ("ivf_topk", "probes"),
+    ("ivf_topk", "corpus"),
+    ("ivf_topk_trained", "probes"),
+    ("ivf_topk_trained", "corpus"),
+    ("ivf_probe_index", "probes"),
+    ("ivf_probe_index", "corpus"),
+    ("build_ivf_index", "corpus"),
+    ("semantic_dedup_pairs", "corpus"),
+]
+
+
+@pytest.mark.parametrize("verb,empty", _EMPTY_INPUT_CASES)
+def test_ivf_family_empty_inputs_return_zero_rows(spark, tmp_path, verb, empty):
+    """An empty probe set or an empty corpus runs the same IVF code as
+    a normal input and yields zero rows with the verb's contract
+    columns."""
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        _read_cells,
+        build_ivf_index,
+        ivf_probe_index,
+        ivf_topk,
+        ivf_topk_trained,
+        semantic_dedup_pairs,
+    )
+
+    vecs = _tricky_vecs(spark)
+    corpus = vecs.filter("false") if empty == "corpus" else vecs
+    probes = (
+        vecs.filter("false")
+        if empty == "probes"
+        else vecs.filter("vec_id in (1, 2, 4)")
+    )
+    index_dir = str(tmp_path / "ivf")
+    if verb == "ivf_topk":
+        out = ivf_topk(corpus, probes, k=5, centroid_stride=3, nprobe=2)
+        cols = _TOPK_COLS
+    elif verb == "ivf_topk_trained":
+        out = ivf_topk_trained(corpus, probes, k=5, iters=1, nprobe=2)
+        cols = _TOPK_COLS
+    elif verb == "ivf_probe_index":
+        build_ivf_index(corpus, index_dir, centroid_stride=3)
+        out = ivf_probe_index(spark, index_dir, probes, k=5, nprobe=2)
+        cols = _TOPK_COLS
+    elif verb == "build_ivf_index":
+        build_ivf_index(corpus, index_dir, centroid_stride=3)
+        out = _read_cells(spark, index_dir)
+        cols = ["vid", "vec", "norm", "cvid", "src"]
+    else:
+        out = semantic_dedup_pairs(corpus, centroid_stride=3, threshold=0.0)
+        cols = ["vec_a", "vec_b", "cosine"]
+    assert out.columns == cols
+    assert out.collect() == []
+
+
+def test_ivf_index_over_empty_corpus_keeps_every_verb_working(spark, tmp_path):
+    """An index built from an empty corpus has no cell files and no
+    centroids: probing, compacting and measuring drift still work on
+    its fixed cell schema, and appending a non-empty batch raises
+    instead of silently dropping the batch."""
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        build_ivf_index,
+        compact_ivf_index,
+        ivf_assignment_drift,
+        ivf_index_append,
+        ivf_probe_index,
+    )
+
+    vecs = _tricky_vecs(spark)
+    index_dir = str(tmp_path / "ivf")
+    build_ivf_index(vecs.filter("false"), index_dir, centroid_stride=3)
+    assert ivf_probe_index(spark, index_dir, vecs, k=5, nprobe=2).collect() == []
+    with pytest.raises(ValueError, match="no centroids"):
+        ivf_index_append(spark, index_dir, vecs)
+    ivf_index_append(spark, index_dir, vecs.filter("false"))
+    assert compact_ivf_index(spark, index_dir) == (0, 0)
+    (drift,) = ivf_assignment_drift(spark, index_dir, iters=1).collect()
+    assert drift.n_vectors == 0
+
+
+def _random_vecs(spark, n: int, dim: int = 8, seed: int = 7):
+    """n seeded standard-normal float32 vectors with ids 0..n-1."""
+    import numpy as np
+    import pandas as pd
+
+    mat = np.random.default_rng(seed).standard_normal((n, dim)).astype(
+        np.float32
+    )
+    pdf = pd.DataFrame({"vec_id": np.arange(n, dtype=np.int64)})
+    pdf["embedding"] = list(mat)
+    return spark.createDataFrame(pdf, "vec_id long, embedding array<float>")
+
+
+def test_ivf_over_cap_probe_sets_equal_union_of_panel_runs(spark, tmp_path):
+    """5,000 probes exceed the probe panel, so ivf_topk_trained and
+    ivf_probe_index co-group probes and corpus by cell; the result must
+    equal the union of the panel-sized runs over the same probes."""
+    from functools import reduce
+
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        _PANEL_CAP,
+        build_ivf_index,
+        ivf_probe_index,
+        ivf_topk_trained,
+        train_ivf_centroids,
+    )
+
+    vecs = _random_vecs(spark, 6000)
+    n_probes = 5000
+    assert n_probes > _PANEL_CAP
+    probes = vecs.filter(f"vec_id < {n_probes}")
+    chunks = [
+        probes.filter(
+            (F.col("vec_id") >= lo) & (F.col("vec_id") < lo + _PANEL_CAP)
+        )
+        for lo in range(0, n_probes, _PANEL_CAP)
+    ]
+    index_dir = str(tmp_path / "ivf")
+    build_ivf_index(
+        vecs, index_dir, centroids_n=train_ivf_centroids(vecs, iters=1)
+    )
+    verbs = {
+        "trained": lambda p: ivf_topk_trained(vecs, p, k=3, iters=1, nprobe=2),
+        "serving": lambda p: ivf_probe_index(spark, index_dir, p, k=3, nprobe=2),
+    }
+    for name, verb in verbs.items():
+        whole = verb(probes)
+        plan = whole._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapCoGroupsInArrow" in plan, (name, plan)
+        got = sorted(tuple(r) for r in whole.collect())
+        want = sorted(
+            tuple(r)
+            for r in reduce(
+                lambda a, b: a.unionAll(b), [verb(c) for c in chunks]
+            ).collect()
+        )
+        assert len(got) == 3 * n_probes, name
+        assert got == want, name
+
+
+def test_stride_one_index_puts_every_vid_in_its_own_cell(spark, tmp_path):
+    """Stride 1 makes every corpus vector a centroid: with more than
+    4,096 distinct vectors held in-task, each vid lands in its own
+    cell."""
+    from business_intelligence_and_data_warehouse_spark.operators.similarity import (
+        _read_cells,
+        build_ivf_index,
+    )
+
+    n = 4200
+    index_dir = str(tmp_path / "ivf")
+    build_ivf_index(_random_vecs(spark, n, dim=16), index_dir, centroid_stride=1)
+    cells = _read_cells(spark, index_dir)
+    assert cells.count() == n
+    assert cells.filter(F.col("cvid") != F.col("vid")).count() == 0
 
 
 def test_simhash_arrow_matches_jvm_form(spark):

@@ -500,6 +500,10 @@ def test_no_collect_in_query_code_paths():
             "operators/similarity.py",
             'scored.orderBy(F.desc("score"), F.col("vid")).limit(1).collect()',
         ),
+        # bounded: the IVF centroid set every IVF verb holds in-task —
+        # ≈√N rows for the trained quantizer (the probe panel, by
+        # contrast, is a take(_PANEL_CAP + 1))
+        ("operators/similarity.py", "return cents_n.collect()"),
         # bounded: the artifact-memo corpus fingerprint — ONE agg row
         # (count + bit_xor digest), the content-address every memo key
         # and ingest load label folds in
@@ -522,11 +526,12 @@ def test_no_collect_in_query_code_paths():
 
 def test_ivf_probe_scan_partition_prunes(spark, tmp_path, monkeypatch):
     """The probe-many half of the IVF index must read ONLY the probed
-    cell partitions.  r13 fast path (panel-sized probe batch): the
+    cell partitions.  Panel feeder (panel-sized probe batch): the
     cells scan carries a STATIC PartitionFilters IN-set on cvid (no
     subquery job at all) and the verify is one MapInArrow pass with no
-    joins.  Over-cap fallback (forced via the cap): the r12 dynamic
-    partition-pruning join form — without either, every probe batch
+    joins.  Cogroup feeder (forced via the cap): probes and cells
+    co-group by cell, and the left-semi on the probed cells prunes the
+    cells scan dynamically — without either, every probe batch
     re-reads the whole corpus index."""
     from business_intelligence_and_data_warehouse_spark.operators import (
         similarity as sim,
@@ -549,11 +554,18 @@ def test_ivf_probe_scan_partition_prunes(spark, tmp_path, monkeypatch):
     df = ivf_probe_index(spark, index_dir, probes, k=10, nprobe=4)
     plan = df._jdf.queryExecution().explainString(mode)
     assert "PartitionFilters" in plan, plan
-    assert re.search(r"PartitionFilters: \[cvid#\d+ IN", plan), plan
+    assert re.search(r"PartitionFilters: \[cvid#\d+L? IN", plan), plan
     assert "MapInArrow" in plan, plan
     assert "Join" not in plan, plan
-    # the over-cap fallback keeps the r12 DPP-pruned join form
+    # the cogroup feeder: one co-grouped scoring pass, no cartesian,
+    # and the cells scan still pruned to the probed cells
     monkeypatch.setattr(sim, "_PANEL_CAP", 0)
     df = ivf_probe_index(spark, index_dir, probes, k=10, nprobe=4)
     plan = df._jdf.queryExecution().explainString(mode)
-    assert "dynamicpruning" in plan.lower(), plan
+    assert "FlatMapCoGroupsInArrow" in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert re.search(
+        r"PartitionFilters: \[[^\]]*dynamicpruningexpression\(cvid#\d+L? IN "
+        r"dynamicpruning#\d+\)",
+        plan,
+    ), plan
